@@ -39,6 +39,7 @@ from .functions.smallfloat import (
     NORM_TABLE,
     norm_length_byte_boundaries,
 )
+from .operators.index_build import FORMAT_VERSION
 
 K1, B = 1.2, 0.75
 
@@ -139,7 +140,10 @@ def ensure_index(spark: SparkSession, sf_dir: str) -> str:
             m = json.load(f)
         # stale if the layout version moved OR the multi-valued keyword
         # field is missing (indexes cached before round 5)
-        if m.get("format_version") != 5 or "labels" not in m.get("fields", {}):
+        if (
+            m.get("format_version") != FORMAT_VERSION
+            or "labels" not in m.get("fields", {})
+        ):
             shutil.rmtree(out, ignore_errors=True)
     IndexBuilder(
         spark, out, k1=K1, b=B, n_buckets=8, n_segments=8, salt_target=2000,
@@ -180,7 +184,7 @@ def ensure_spatial_index(spark: SparkSession, sf_dir: str) -> str:
         with open(mpath) as f:
             m = json.load(f)
         if (
-            m.get("format_version") != 5
+            m.get("format_version") != FORMAT_VERSION
             or "geoq" not in m.get("fields", {})
             or m.get("numeric_fields") != ["lon", "lat"]
         ):
@@ -224,7 +228,7 @@ def ensure_analyzer_index(
 
         with open(mpath) as f:
             m = json.load(f)
-        if m.get("format_version") != 5 or m.get("analyzer") != analyzer:
+        if m.get("format_version") != FORMAT_VERSION or m.get("analyzer") != analyzer:
             shutil.rmtree(out, ignore_errors=True)
     IndexBuilder(
         spark, out, k1=K1, b=B, n_buckets=8, n_segments=8, salt_target=2000,
@@ -263,7 +267,10 @@ def ensure_sweet_index(spark: SparkSession, sf_dir: str) -> str:
 
         with open(mpath) as f:
             m = json.load(f)
-        if m.get("format_version") != 5 or m.get("norm_spec") != SWEET_NORM_SPEC:
+        if (
+            m.get("format_version") != FORMAT_VERSION
+            or m.get("norm_spec") != SWEET_NORM_SPEC
+        ):
             shutil.rmtree(out, ignore_errors=True)
     IndexBuilder(
         spark, out, k1=K1, b=B, n_buckets=8, n_segments=8, salt_target=2000,

@@ -11,49 +11,46 @@ Re-derivation of the reference's merge pipeline (SURVEY.md §2.3):
   per-segment bounds used the segment's own avgdl and are not valid upper
   bounds globally — this is why multi-segment searchers disable pruning and
   compaction restores it.
-- the heavy stored-doc data is NOT rewritten: the merged manifest references
-  the source segments' staging tables with docbases (docs_view unions them),
-  like Lucene merges postings/norms but can share doc stores.
+- the heavy stored-doc data is NOT rewritten: the merged manifest lists the
+  source segments' doc stores with shifted docbases, like Lucene merges
+  postings/norms but can share doc stores. A merge that applies deletes
+  renumbers docids (MergeState.DocMap), so it rewrites the live docs as one
+  doc store in the same staging doc-row layout.
 - salting is re-planned from EXACT merged df (summed per-segment term_stats,
   a tiny metadata union) rather than the build-time sketch.
 
-The merge is itself a resumable staged job with an atomic manifest commit.
+Sources are opened with index_build.open_segments and the result committed
+with index_build.commit_segment — the same loader and writer as searches and
+builds, so a merged segment has the same format as a built one.
 """
 from __future__ import annotations
 
 import json
 import math
-import time
+import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..oracle import norm_cache
 from .codec import BLOCK_SIZE
+from .deletes import DeleteLog
 from .index_build import (
-    FIELD,
+    DOC_COLS,
+    FKEY_SEP,
     PARTIALS_DDL,
     POSTINGS_DDL,
-    load_manifest,
+    SegmentSet,
+    commit_segment,
+    field_infos,
     make_merge_encode,
+    open_segments,
+    score_caches,
     split_salts,
+    term_stats_view,
     write_postings,
 )
-
-
-def _merged_numeric_fields(segments) -> list[str]:
-    """Numeric doc-value columns of the merged index. Like the analyzer,
-    the numeric field set is an IndexWriter-level invariant: segments of
-    one index always agree, so a mismatch is a caller error, not a merge
-    case (FieldInfos dv-type consistency checks raise the same way)."""
-    sets = {tuple(s["manifest"].get("numeric_fields") or []) for s in segments}
-    if len(sets) > 1:
-        raise ValueError(
-            f"cannot merge segments with different numeric fields: {sorted(sets)}"
-        )
-    return list(sets.pop())
 
 
 def _remap(docids: np.ndarray, deleted: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -134,7 +131,7 @@ def _decoded_partials(
                     if len(pay_lens)
                     else None
                 )
-                hkey = r.field + "\x1f" + r.term
+                hkey = r.field + FKEY_SEP + r.term
                 for salt, b0, b1 in split_salts(
                     docids, hot.get(hkey, 1), max_doc
                 ):
@@ -186,6 +183,68 @@ def _decoded_partials(
     return out
 
 
+def _rewrite_live_docs(
+    spark: SparkSession, seg_set: SegmentSet, deleted: np.ndarray, out_dir: str
+) -> tuple[int, dict, list[dict]]:
+    """Rewrite the live docs with MergeState.DocMap renumbering (docid -
+    #deleted below; postings get the same remap during decode) as one doc
+    store in the staging doc-row layout, then recount the field stats over
+    it in one aggregation. Returns (max_doc, fields, stagings)."""
+
+    def remap_docid(ser: pd.Series) -> pd.Series:
+        ids = ser.to_numpy(dtype=np.int64)
+        keep, new = _remap(ids, deleted)
+        out = new.astype("float64")
+        out[~keep] = np.nan  # dropped below
+        return pd.Series(out, index=ser.index)
+
+    live = (
+        seg_set.docs(spark)
+        .withColumn("new_docid", F.pandas_udf(remap_docid, "double")(F.col("docid")))
+        .filter(F.col("new_docid").isNotNull())
+        .select(
+            F.lit(0).cast("int").alias("pid"),
+            F.col("new_docid").cast("long").alias("local_rank"),
+            *DOC_COLS,
+            *seg_set.shared["numeric_fields"],
+        )
+    )
+    path = os.path.join(out_dir, "docs")
+    n_ranges = max(len(seg_set.segments), 2)
+    live.repartitionByRange(n_ranges, "local_rank").sortWithinPartitions(
+        "local_rank"
+    ).write.mode("overwrite").parquet(path)
+    kw_fields = [f for f, info in seg_set.fields.items() if info["omit_norms"]]
+    st = (
+        spark.read.parquet(path)
+        .agg(
+            F.count("*").alias("max_doc"),
+            F.sum(F.when(F.col("field_length") > 0, 1).otherwise(0)).alias("dc"),
+            F.sum("field_length").alias("st"),
+            *[
+                F.sum(
+                    F.when(F.col(f).isNotNull() & (F.col(f) != ""), 1).otherwise(0)
+                ).alias(f"kw{i}")
+                for i, f in enumerate(kw_fields)
+            ],
+        )
+        .collect()[0]
+    )
+    max_doc = int(st["max_doc"])
+    fields = field_infos(
+        max_doc,
+        int(st["dc"] or 0),
+        int(st["st"] or 0),
+        {f: int(st[f"kw{i}"] or 0) for i, f in enumerate(kw_fields)},
+    )
+    return max_doc, fields, [{"path": path, "offsets": {"0": 0}, "docbase": 0}]
+
+
+# merged payload richness = the weakest source level (a segment without
+# positions/offsets cannot supply them, FieldInfos merge semantics)
+_LEVELS = ["docs_freqs", "docs_freqs_positions", "docs_freqs_positions_offsets"]
+
+
 def merge_segments(
     spark: SparkSession,
     segment_dirs: list[str],
@@ -195,23 +254,13 @@ def merge_segments(
     block_size: int = BLOCK_SIZE,
     build_id: str = "merge-0",
 ) -> dict:
-    """Compact N segments into one index at out_dir; returns its manifest."""
-    import os
-
+    """Compact N segments into one index at out_dir; returns its manifest.
+    Raises ValueError if the sources disagree on a shared setting."""
     os.makedirs(out_dir, exist_ok=True)
-    t0 = time.time()
-    segments = []
-    docbase = 0
-    for d in segment_dirs:
-        m = load_manifest(d)
-        segments.append({"dir": d, "manifest": m, "docbase": docbase})
-        docbase += int(m["max_doc"])
-    first = segments[0]["manifest"]
-    k1, b = float(first["k1"]), float(first["b"])
+    seg_set = open_segments(segment_dirs)
+    segments = seg_set.segments
 
     # gather per-segment delete logs -> one sorted global delete set
-    from .deletes import DeleteLog
-
     del_parts = []
     for s in segments:
         arr = DeleteLog(spark, s["dir"]).deleted_array()
@@ -220,109 +269,13 @@ def merge_segments(
     deleted = (
         np.unique(np.concatenate(del_parts)) if del_parts else np.empty(0, np.int64)
     )
-
-    docs_union = None
     if deleted.size:
-        # rewrite docs with MergeState.DocMap renumbering (docid - #deleted
-        # below); postings get the same remap during decode
-        from .index_build import DOC_COLS, docs_view
-
-        num_fields = _merged_numeric_fields(segments)
-        for s in segments:
-            df = docs_view(spark, s["manifest"])
-            if s["docbase"]:
-                df = df.withColumn("docid", F.col("docid") + F.lit(s["docbase"]))
-            docs_union = df if docs_union is None else docs_union.unionByName(df)
-        def remap_docid(ser: pd.Series) -> pd.Series:
-            ids = ser.to_numpy(dtype=np.int64)
-            keep, new = _remap(ids, deleted)
-            out = new.astype("float64")
-            out[~keep] = np.nan  # dropped below
-            return pd.Series(out, index=ser.index)
-
-        docs_union = (
-            docs_union.withColumn(
-                "new_docid", F.pandas_udf(remap_docid, "double")(F.col("docid"))
-            )
-            .filter(F.col("new_docid").isNotNull())
-            .select(
-                F.col("new_docid").cast("long").alias("docid"),
-                *DOC_COLS,
-                *num_fields,
-            )
-        )
-        import os as _os
-
-        docs_path = _os.path.join(out_dir, "docs")
-        n_ranges = max(len(segments), 2)
-        docs_union.repartitionByRange(n_ranges, "docid").sortWithinPartitions(
-            "docid"
-        ).write.mode("overwrite").parquet(docs_path)
-        docs_tbl = spark.read.parquet(docs_path)
-        st = docs_tbl.agg(
-            F.count("*").alias("max_doc"),
-            F.sum(F.when(F.col("field_length") > 0, 1).otherwise(0)).alias("dc"),
-            F.sum("field_length").alias("st"),
-        ).collect()[0]
-        max_doc = int(st["max_doc"])
-        doc_count = int(st["dc"])
-        sum_ttf = int(st["st"] or 0)
+        max_doc, fields, stagings = _rewrite_live_docs(spark, seg_set, deleted, out_dir)
     else:
-        max_doc = docbase
-        sum_ttf = sum(int(s["manifest"]["sum_ttf"]) for s in segments)
-        doc_count = sum(int(s["manifest"]["doc_count"]) for s in segments)
-
-    avgdl = (
-        float(np.float32(np.float64(sum_ttf) / np.float64(max_doc)))
-        if sum_ttf > 0
-        else 1.0
-    )
-
-    # per-field stats: text recomputed above; keyword (omitNorms) fields
-    # summed from the source manifests, or recounted from the rewritten docs
-    # table when a delete-merge renumbered
-    from .index_build import FIELD, omit_norms_cache
-
-    kw_fields: list[str] = []
-    for s in segments:
-        for f, info in (s["manifest"].get("fields") or {}).items():
-            if info.get("omit_norms") and f not in kw_fields:
-                kw_fields.append(f)
-    fields = {
-        FIELD: {
-            "doc_count": doc_count,
-            "sum_ttf": sum_ttf,
-            "avgdl": avgdl,
-            "omit_norms": False,
-        }
-    }
-    if deleted.size:
-        for f in kw_fields:
-            cnt = int(
-                docs_tbl.filter(
-                    F.col(f).isNotNull() & (F.col(f) != "")
-                ).count()
-            )
-            fields[f] = {
-                "doc_count": cnt, "sum_ttf": cnt, "avgdl": 1.0, "omit_norms": True,
-            }
-    else:
-        for f in kw_fields:
-            s_cnt = sum(
-                int((s["manifest"].get("fields") or {}).get(f, {}).get("doc_count", 0))
-                for s in segments
-            )
-            fields[f] = {
-                "doc_count": s_cnt, "sum_ttf": s_cnt, "avgdl": 1.0, "omit_norms": True,
-            }
-    caches = {FIELD: norm_cache(k1, b, np.float32(avgdl))}
-    kwc = omit_norms_cache(k1)
-    for f in kw_fields:
-        caches[f] = kwc
+        max_doc, fields, stagings = seg_set.max_doc, seg_set.fields, seg_set.stagings
+    caches = score_caches(seg_set.shared["k1"], seg_set.shared["b"], fields)
 
     # exact merged df from the per-segment terms dictionaries -> salt plan
-    from .index_build import term_stats_view
-
     ts = None
     for s in segments:
         df = term_stats_view(spark, s["manifest"]["tables"]["postings"])
@@ -333,7 +286,7 @@ def merge_segments(
         .collect()
     )
     hot = {
-        r["field"] + "\x1f" + r["term"]: int(math.ceil(r["df"] / salt_target))
+        r["field"] + FKEY_SEP + r["term"]: int(math.ceil(r["df"] / salt_target))
         for r in hot_rows
     }
 
@@ -352,118 +305,18 @@ def merge_segments(
     )
     write_postings(encoded, os.path.join(out_dir, "postings"), n_buckets)
 
-    # terms dictionary is embedded in the postings write (block_no = -2 rows)
-    from .index_build import local_table
-
-    local_table(
-        spark,
-        [
-            (f, max_doc, info["doc_count"], info["sum_ttf"], info["avgdl"])
-            for f, info in fields.items()
-        ],
-        "field string, max_doc long, doc_count long, sum_ttf long, avgdl double",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, "field_stats"))
-
-    # checkpoints: the encode meta rows of this merge
-    metas = [
-        json.loads(r["term"])
-        for r in spark.read.parquet(os.path.join(out_dir, "postings"))
-        .filter(F.col("block_no") == -1)
-        .select("term")
-        .collect()
-    ]
-    from datetime import datetime, timezone
-
-    now = datetime.now(timezone.utc).isoformat()
-    local_table(
-        spark,
-        [
-            (build_id, "merge", i, "done", int(m["postings"]),
-             float(m["postings_per_sec"]), m["lineage"], now)
-            for i, m in enumerate(metas)
-        ],
-        "build_id string, stage string, partition_id int, status string,"
-        " postings long, postings_per_sec double, lineage string, committed_at string",
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "build_checkpoints")
-    )
-
-    # merged manifest: postings/stats here; doc stores shared from sources
-    # unless deletes forced a renumbering rewrite (docs_table)
-    stagings = []
-    for s in segments:
-        for sg in s["manifest"].get("stagings") or [
-            {
-                "path": s["manifest"]["tables"]["staging"],
-                "offsets": s["manifest"]["offsets"],
-                "docbase": 0,
-            }
-        ]:
-            stagings.append(
-                {
-                    "path": sg["path"],
-                    "offsets": sg["offsets"],
-                    "docbase": int(sg.get("docbase", 0)) + s["docbase"],
-                }
-            )
-    # merged payload richness = the weakest source level (a segment without
-    # positions/offsets cannot supply them, FieldInfos merge semantics)
-    _LEVELS = ["docs_freqs", "docs_freqs_positions", "docs_freqs_positions_offsets"]
-    index_options = _LEVELS[
-        min(
-            _LEVELS.index(
-                s["manifest"].get("index_options", "docs_freqs_positions")
-            )
-            for s in segments
-        )
-    ]
+    manifests = [s["manifest"] for s in segments]
     # payloads survive the merge only if EVERY source carries the same
     # provider (FieldInfos merge: a payload-less segment poisons the field)
-    providers = {s["manifest"].get("payload_provider") for s in segments}
-    payload_provider = providers.pop() if len(providers) == 1 else None
-    analyzers = {s["manifest"].get("analyzer", "standard") for s in segments}
-    if len(analyzers) > 1:
-        # segments analyzed with different chains index different term
-        # spaces; a merged index would silently mix them (Lucene cannot
-        # produce this state: the analyzer is fixed at IndexWriter level)
-        raise ValueError(
-            f"cannot merge segments with different analyzers: {sorted(analyzers)}"
-        )
-    analyzer = analyzers.pop()
-    manifest = {
-        "format_version": 5,
-        "build_id": build_id,
-        "field": FIELD,
-        "index_options": index_options,
-        "payload_provider": payload_provider,
-        "analyzer": analyzer,
-        "numeric_fields": _merged_numeric_fields(segments),
-        "fields": fields,
-        "k1": k1,
-        "b": b,
+    providers = {m["payload_provider"] for m in manifests}
+    settings = {
+        **seg_set.shared,
+        "index_options": _LEVELS[min(_LEVELS.index(m["index_options"]) for m in manifests)],
+        "payload_provider": providers.pop() if len(providers) == 1 else None,
         "block_size": block_size,
         "n_buckets": n_buckets,
         "salt_target": salt_target,
-        "max_doc": max_doc,
-        "doc_count": doc_count,
-        "sum_ttf": sum_ttf,
-        "avgdl": avgdl,
-        "stagings": None if deleted.size else stagings,
-        "docs_table": os.path.join(out_dir, "docs") if deleted.size else None,
-        "n_deletes_applied": int(deleted.size),
-        "hot_terms": hot,
-        "merged_from": [s["dir"] for s in segments],
-        "tables": {
-            "staging": stagings[0]["path"],
-            "postings": os.path.join(out_dir, "postings"),
-            "field_stats": os.path.join(out_dir, "field_stats"),
-            "build_checkpoints": os.path.join(out_dir, "build_checkpoints"),
-        },
-        "committed_at": now,
-        "merge_elapsed": round(time.time() - t0, 2),
     }
-    tmp = os.path.join(out_dir, "_manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(out_dir, "_manifest.json"))  # atomic publish
-    return manifest
+    return commit_segment(
+        spark, out_dir, build_id, settings, max_doc, fields, stagings, hot, []
+    )

@@ -3,7 +3,7 @@
 Lifecycle mirrors IndexSearcher.Search (SURVEY.md §3.1):
  1. rewrite()  — MultiTermQuery expansion against the terms dict
                  (MultiTermQuery.cs:65-118; fixpoint IndexSearcher.cs:753-760)
- 2. weights    — global stats (field_stats/term_stats, counting all docs like
+ 2. weights    — global stats (field/term stats, counting all docs like
                  Lucene counts deleted-until-merged) -> frozen float32
                  weightValue = idf * boost * (k1+1) per clause
  3. scoring    — bucket- and term-pruned scan of posting blocks; numpy decode
@@ -43,7 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
 from ..oracle import idf as idf_f32
-from ..oracle import norm_cache
 from ..plans.query import (
     BooleanQuery,
     CommonTermsQuery,
@@ -67,9 +66,8 @@ from .codec import BLOCK_SIZE
 from .index_build import (
     FIELD,
     FKEY_SEP,
-    docs_view,
-    load_manifest,
-    omit_norms_cache,
+    open_segments,
+    score_caches,
     term_bucket,
 )
 
@@ -112,59 +110,25 @@ class IndexSearcher:
         lam: float = 0.1,
     ):
         self.spark = spark
-        dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
-        if not dirs:
-            raise ValueError("at least one index segment required")
-        self.index_dir = dirs[0]
-        self.segments = []
-        docbase = 0
-        for d in dirs:
-            m = load_manifest(d)
-            self.segments.append({"dir": d, "manifest": m, "docbase": docbase})
-            docbase += int(m["max_doc"])
-        self.manifest = self.segments[0]["manifest"]
-        self.k1 = float(self.manifest["k1"])
-        self.b = float(self.manifest["b"])
+        self._segment_set = open_segments(
+            [index_dir] if isinstance(index_dir, str) else list(index_dir)
+        )
+        self.segments = self._segment_set.segments
+        self.index_dir = self.segments[0]["dir"]
+        self.k1 = float(self._segment_set.shared["k1"])
+        self.b = float(self._segment_set.shared["b"])
         # the index's analysis chain — query-side analysis (parser, MLT,
         # highlighting re-analysis) must run the same chain or stemmed
         # indexes silently miss (QueryParser(analyzer) parity)
-        self.analyzer = self.manifest.get("analyzer", "standard")
-        assert all(
-            s["manifest"].get("analyzer", "standard") == self.analyzer
-            for s in self.segments
-        ), "segments indexed with different analyzers"
-        assert all(
-            float(s["manifest"]["k1"]) == self.k1 and float(s["manifest"]["b"]) == self.b
-            for s in self.segments
-        ), "segments indexed with different BM25 parameters"
-        self.max_doc = docbase
-        sum_ttf = sum(int(s["manifest"]["sum_ttf"]) for s in self.segments)
-        self.avgdl = (
-            np.float32(np.float64(sum_ttf) / np.float64(self.max_doc))
-            if sum_ttf > 0
-            else np.float32(1.0)
-        )
-        self._cache256 = norm_cache(self.k1, self.b, self.avgdl)
-        # per-field denominator caches: the analyzed text field uses the
-        # byte315 norm cache; omitNorms keyword fields score with norm = k1
-        # (b treated as 0, BM25Similarity.cs:262) — a constant cache
-        fields_info: dict[str, dict] = {}
-        for s in self.segments:
-            for f, info in (s["manifest"].get("fields") or {}).items():
-                if f in fields_info:
-                    # cross-segment field stats SUM (TermContext-style)
-                    for key in ("doc_count", "sum_ttf"):
-                        fields_info[f][key] = fields_info[f].get(key, 0) + info.get(key, 0)
-                else:
-                    fields_info[f] = dict(info)
-        if FIELD not in fields_info:
-            fields_info[FIELD] = {"omit_norms": False, "sum_ttf": sum_ttf}
-        self.fields_info = fields_info
-        kwc = omit_norms_cache(self.k1)
-        self._field_caches = {
-            f: (self._cache256 if not info.get("omit_norms") else kwc)
-            for f, info in fields_info.items()
-        }
+        self.analyzer = self._segment_set.shared["analyzer"]
+        self.max_doc = self._segment_set.max_doc
+        self.avgdl = self._segment_set.avgdl
+        # per-field stats summed across segments; per-field denominator
+        # caches: the analyzed text field uses the byte315 norm cache,
+        # omitNorms keyword fields score with norm = k1 (b treated as 0,
+        # BM25Similarity.cs:262) — a constant cache
+        self.fields_info = fields_info = self._segment_set.fields
+        self._field_caches = score_caches(self.k1, self.b, fields_info)
         # pluggable similarity: "bm25" (default) or "classic" (TF-IDF /
         # DefaultSimilarity). Norm bytes are similarity-independent
         # (SURVEY §4.2), so this is a pure query-time switch; classic
@@ -243,13 +207,7 @@ class IndexSearcher:
         return out
 
     def docs(self) -> DataFrame:
-        out = None
-        for s in self.segments:
-            df = docs_view(self.spark, s["manifest"])
-            if s["docbase"]:
-                df = df.withColumn("docid", F.col("docid") + F.lit(s["docbase"]))
-            out = df if out is None else out.unionByName(df)
-        return out
+        return self._segment_set.docs(self.spark)
 
     def term_stats(self) -> DataFrame:
         from .index_build import term_stats_view

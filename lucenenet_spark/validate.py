@@ -9,7 +9,8 @@ Re-derivation of the reference's CheckIndex validations
      block metadata (first/last/count) consistent with payloads
   3. norms coverage: docs table count == max_doc; norm byte re-derivable
      from field_length
-  4. field stats: max_doc/doc_count/sum_ttf re-derived from docs table
+  4. collection stats: manifest max_doc/doc_count/sum_ttf re-derived from
+     the docs view
   5. block-max bounds dominate every decoded score kernel (prune safety)
 
 Everything is distributed (mapInPandas over block rows + aggregations);
@@ -22,8 +23,12 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .operators.index_build import docs_view, load_manifest
-from .oracle import norm_cache
+from .operators.index_build import (
+    docs_view,
+    load_manifest,
+    score_caches,
+    term_stats_view,
+)
 
 
 def check_index(spark: SparkSession, index_dir: str) -> dict:
@@ -33,16 +38,8 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         F.col("block_no") >= 0
     )
     docs = docs_view(spark, m)
-    from .operators.index_build import term_stats_view
-
     term_stats = term_stats_view(spark, m["tables"]["postings"])
-    from .operators.index_build import FIELD, omit_norms_cache
-
-    caches = {FIELD: norm_cache(m["k1"], m["b"], np.float32(m["avgdl"]))}
-    kwc = omit_norms_cache(m["k1"])
-    for f, info in (m.get("fields") or {}).items():
-        if info.get("omit_norms"):
-            caches[f] = kwc
+    caches = score_caches(m["k1"], m["b"], m["fields"])
     out: dict[str, dict] = {}
 
     # -- decode every block once: recount + chain + bound + position checks --
@@ -188,7 +185,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
     # -- norms + field stats (CheckIndex.cs:920,1626) ------------------------
     # re-derive under the index's own norm encoder (manifest norm_spec —
     # a sweet-spot index stores SweetSpotSimilarity.ComputeLengthNorm bytes)
-    norm_spec = m.get("norm_spec", "standard")
+    norm_spec = m["norm_spec"]
 
     def renorm(lengths: pd.Series) -> pd.Series:
         from .functions.sweetspot import norm_encoder
@@ -218,7 +215,7 @@ def check_index(spark: SparkSession, index_dir: str) -> dict:
         and stats["max_docid"] == stats["max_doc"] - 1,
         "max_doc": int(stats["max_doc"]),
     }
-    out["field_stats"] = {
+    out["collection_stats"] = {
         "ok": int(stats["max_doc"]) == m["max_doc"]
         and int(stats["doc_count"]) == m["doc_count"]
         and int(stats["sum_ttf"]) == m["sum_ttf"],

@@ -89,6 +89,44 @@ def test_merge_applies_deletes_with_renumbering(
     assert report["ok"], report
 
 
+def test_merge_of_delete_merged_segment(spark, del_index, corpus_pdf, tmp_path):
+    """A segment written by a delete-applying merge is an ordinary segment:
+    merging it again with a freshly built one gives the index of the live
+    corpus followed by the fresh docs."""
+    from lucenenet_spark.operators.index_build import IndexBuilder
+
+    s = IndexSearcher(spark, del_index)
+    s.delete_by_term("hello")
+    deleted = {r["docid"] for r in s._deleted_docids().collect()}
+    assert deleted
+    compacted = str(tmp_path / "compacted")
+    merge_segments(spark, [del_index], compacted, n_buckets=4, build_id="del-merge")
+
+    fresh_pdf = corpus_pdf.head(100)
+    fresh = str(tmp_path / "fresh")
+    IndexBuilder(
+        spark, fresh, n_buckets=4, n_segments=2, salt_target=60,
+        input_clustered=False,
+    ).build(spark.createDataFrame(fresh_pdf), build_id="fresh")
+
+    out = str(tmp_path / "remerged")
+    merge_segments(spark, [compacted, fresh], out, n_buckets=4, build_id="re-merge")
+    m = IndexSearcher(spark, out)
+    texts = corpus_pdf["text"].tolist()
+    live_oracle = oracle.build_index(
+        [t for i, t in enumerate(texts) if i not in deleted]
+        + fresh_pdf["text"].tolist()
+    )
+    assert m.max_doc == live_oracle.max_doc
+    assert m.avgdl == live_oracle.avgdl
+    for term in ["popcorn", "word7", "common3", "hello"]:
+        got = hits(m.search(TermQuery(term=term), 20))
+        want = oracle.top_k(oracle.term_scores(live_oracle, term), 20)
+        assert got == want, term
+    report = check_index(spark, out)
+    assert report["ok"], report
+
+
 def test_filtered_query_by_role(searcher, oracle_index, corpus_pdf):
     q = FilteredQuery(query=TermQuery(term="popcorn"), where="role = 'user'")
     got = hits(searcher.search(q, 50))

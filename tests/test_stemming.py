@@ -292,10 +292,24 @@ def test_highlight_marks_stemmed_matches(spark, stemmed_index):
                for m in marked)
 
 
-def test_merge_rejects_mixed_analyzers(spark, tmp_path, stemmed_index, index_dir):
+@pytest.mark.parametrize(
+    "setting",
+    [
+        {"analyzer": "english"},
+        {"norm_spec": "sweetspot:3:10:0.5"},
+        {"k1": 1.5},
+    ],
+    ids=["analyzer", "norm_spec", "k1"],
+)
+def test_merge_rejects_mixed_analyzers(spark, tmp_path, corpus_pdf, index_dir, setting):
+    """Segments that differ in an IndexWriter-level setting index
+    incompatible term spaces or norms; merging them must fail up front."""
+    from lucenenet_spark.operators.index_build import IndexBuilder
     from lucenenet_spark.operators.merge import merge_segments
 
-    with pytest.raises((ValueError, AssertionError)):
-        merge_segments(
-            spark, [index_dir, stemmed_index], str(tmp_path / "mixed")
-        )
+    other = str(tmp_path / "other")
+    IndexBuilder(
+        spark, other, n_buckets=2, n_segments=2, input_clustered=False, **setting
+    ).build(spark.createDataFrame(corpus_pdf.head(40)))
+    with pytest.raises(ValueError):
+        merge_segments(spark, [index_dir, other], str(tmp_path / "mixed"))

@@ -242,3 +242,61 @@ def test_update_documents_retry_is_idempotent(spark, corpus_pdf, tmp_path_factor
         TermQuery(field="conv_id", term=victim)
     ).count()
     assert before == after == len(upd)
+
+
+def test_churn_merges_delete_merged_segments(spark, corpus_pdf, tmp_path):
+    """Upserts and appends under a one-segment budget: the policy merges on
+    both appends, and the second merge takes the delete-applying first
+    merge's output as a source. Exactly one live doc per (conv_id,
+    turn_idx) key survives, each the version handed over last."""
+    base = str(tmp_path / "churn")
+    idx = NRTIndex(
+        spark, base, max_segments=1, n_buckets=1, n_segments=1,
+        keyword_fields=("role", "tool", "conv_id"),
+    )
+    pdf = corpus_pdf.head(300)
+    convs = sorted(pdf["conv_id"].unique())
+    n = len(convs)
+    groups = [convs[: n // 3], convs[n // 3 : 2 * n // 3], convs[2 * n // 3 :]]
+
+    def appended(conv_ids):
+        return pdf[pdf["conv_id"].isin(conv_ids)]
+
+    def upsert_of(conv_ids, batch_id):
+        upd = appended(conv_ids).copy()
+        upd["text"] = f"churned marker{batch_id}"
+        return upd
+
+    want = appended(groups[0]).set_index(["conv_id", "turn_idx"])["text"].to_dict()
+    idx.process_batch(spark.createDataFrame(appended(groups[0])), 0)
+    merges = 0
+    for batch_id, kind, frame in [
+        (1, "update", upsert_of(groups[0][::2], 1)),
+        (2, "append", appended(groups[1])),
+        # rewrites some batch-1 versions, some originals of both appends
+        (3, "update", upsert_of((groups[0] + groups[1])[::3], 3)),
+        (4, "append", appended(groups[2])),
+    ]:
+        gen = idx.read_generation()["generation"]
+        if kind == "update":
+            idx.update_documents(spark.createDataFrame(frame), batch_id, "conv_id")
+        else:
+            idx.process_batch(spark.createDataFrame(frame), batch_id)
+        # a merge publishes one generation beyond the batch's own
+        merges += idx.read_generation()["generation"] - gen - 1
+        want.update(frame.set_index(["conv_id", "turn_idx"])["text"].to_dict())
+    assert merges == 2
+    segs = idx.segments()
+    assert len(segs) == 1
+
+    s = idx.searcher()
+    live = s._apply_live_docs(s.docs()).select("conv_id", "turn_idx").toPandas()
+    keys = list(zip(live["conv_id"], live["turn_idx"].astype(int)))
+    assert len(keys) == len(set(keys)) == len(want)
+    assert set(keys) == set(want)
+    for batch_id in (1, 3):
+        n_upd = sum(1 for t in want.values() if t.endswith(f"marker{batch_id}"))
+        assert n_upd
+        assert s.count(TermQuery(term=f"marker{batch_id}")) == n_upd
+    report = check_index(spark, segs[0])
+    assert report["ok"], report

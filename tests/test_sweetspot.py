@@ -150,3 +150,22 @@ def test_checkindex_validates_sweet_norms(spark, sweet_searcher):
 
     res = check_index(spark, sweet_searcher.index_dir)
     assert res["norms"]["ok"], res["norms"]
+
+
+def test_merge_keeps_sweet_norms(spark, sweet_searcher, corpus_pdf, tmp_path):
+    """A merge of sweet-norm segments is a sweet-norm segment: the manifest
+    keeps the norm encoder, so CheckIndex re-derives the stored bytes."""
+    from lucenenet_spark.operators.index_build import IndexBuilder, load_manifest
+    from lucenenet_spark.operators.merge import merge_segments
+    from lucenenet_spark.validate import check_index
+
+    second = str(tmp_path / "sweet2")
+    IndexBuilder(
+        spark, second, n_buckets=4, n_segments=2, salt_target=60,
+        norm_spec=SPEC, input_clustered=False,
+    ).build(spark.createDataFrame(corpus_pdf.head(100)))
+    out = str(tmp_path / "merged")
+    merge_segments(spark, [sweet_searcher.index_dir, second], out, n_buckets=4)
+    assert load_manifest(out)["norm_spec"] == SPEC
+    res = check_index(spark, out)
+    assert res["ok"], res
